@@ -14,12 +14,13 @@ import java.nio.file.{Files, Paths}
   *     FULL-corpus warmup pass alone cost ~1,130 s — a third of the wall
   *     clock. Warmup now runs a fixed representative subset that touches
   *     every fixture table and engine subsystem once (session, parquet
-  *     footers, codegen/JIT machinery, streaming micro-batch, temp-dir
-  *     I/O). Residual per-query cold cost (each query's own generated
-  *     code compiles on its first timed run) lands in ONE of the three
-  *     timed runs and the MEDIAN discards it; measured effect on the
-  *     medians is <±5% on controls (OPTIMIZATION_r19.md declares this
-  *     measurement change and keeps the old-methodology r18 numbers);
+  *     footers, codegen/JIT machinery, streaming micro-batch and its
+  *     checkpoint temp-dir I/O). Residual per-query cold cost (each
+  *     query's own generated code compiles on its first timed run) lands
+  *     in ONE of the three timed runs and the MEDIAN discards it; the
+  *     control entries' medians moved <±5% under this change. No
+  *     write-up of that measurement exists: BENCH_r18*.json are the last
+  *     artifacts taken with the full-corpus warmup;
   *   - per-query time is the MEDIAN of 3 timed runs — single-shot
   *     timing showed order-dependent noise (r3's first-in-loop query
   *     read 4.4× its r2 time);
@@ -54,6 +55,10 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+    // validated before any timing, so a typo fails in seconds rather
+    // than after an hour-long run
+    val retimeGuardSec =
+      parseRetimeGuard(sys.env.get("SPARK_GRAFT_BENCH_RETIME_GUARD"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -94,14 +99,14 @@ object Bench {
     val warm0 = System.nanoTime()
     // bounded warmup (see header): one entry per fixture table / engine
     // subsystem — events agg/scan/window, embeddings join, documents
-    // text, multimodal decode, streaming micro-batch, jsonl temp-dir
-    // round-trip, date dim, TPC-H join tails (orders/lineitem/supplier/
+    // text, multimodal decode, streaming micro-batch (checkpoint temp
+    // dirs), date dim, TPC-H join tails (orders/lineitem/supplier/
     // nation/region and part), JSON props. Intersected with the corpus
     // so a renamed entry can never break the bench.
     val warmupNames = Seq(
       "q1_agg", "q2_filter_project", "q11_window", "q17_knn",
       "q18_text_stats", "q25_multimodal", "q38_streaming_sessions",
-      "q109_copy_jsonl", "q150_date_dim", "q193_top_supplier",
+      "q150_date_dim", "q193_top_supplier",
       "q232_min_cost_supplier", "q32_json_props").filter(names0.contains)
     warmupNames.foreach(materialize)
     val warmupSec = (System.nanoTime() - warm0) / 1e9
@@ -143,13 +148,8 @@ object Bench {
     // none once the run has already spent 2700 s of wall — a spiky run
     // must degrade to in-run numbers rather than blow the driver budget
     val elapsedSec = (System.nanoTime() - warm0) / 1e9
-    val retimeCap =
-      if (elapsedSec > sys.env.getOrElse(
-        "SPARK_GRAFT_BENCH_RETIME_GUARD", "2700").toDouble) 0 else 6
-    val flagged = inRun.collect {
-      case (n, t) if t >= 1.0 &&
-        prevTimes.get(n).exists(pt => pt > 0 && t / pt >= 2.0) => n
-    }.take(retimeCap)
+    val retimeCap = if (elapsedSec > retimeGuardSec) 0 else 6
+    val flagged = retimeCandidates(inRun, prevTimes, retimeCap)
     val isolated = flagged.map { n =>
       val t = medianOf3(n)
       System.err.println(f"[bench] retimed $n: in-run ${inRun.toMap
@@ -187,6 +187,35 @@ object Bench {
       Files.writeString(Paths.get("BENCH_LOCAL.json"), json + "\n")
     spark.stop()
   }
+
+  /** SPARK_GRAFT_BENCH_RETIME_GUARD: the elapsed wall seconds after
+    * which no spike is re-timed (default 2700). Must be a finite,
+    * non-negative number. */
+  def parseRetimeGuard(raw: Option[String]): Double = {
+    val sec = raw.fold(2700.0) { v =>
+      v.trim.toDoubleOption.getOrElse(throw new IllegalArgumentException(
+        "SPARK_GRAFT_BENCH_RETIME_GUARD must be a number of seconds, " +
+          s"got '$v'"))
+    }
+    require(sec >= 0 && !sec.isInfinite,
+      s"SPARK_GRAFT_BENCH_RETIME_GUARD must be finite and >= 0, got $sec")
+    sec
+  }
+
+  /** The in-run spikes to re-time in isolation: entries that cost ≥1 s
+    * and at least 2× their previous time, largest ratio first, then
+    * largest absolute excess (then name, for a stable order), capped at
+    * `cap` — the cap must drop the smallest spikes, not the
+    * alphabetically last ones. */
+  def retimeCandidates(
+      inRun: Seq[(String, Double)],
+      prevTimes: Map[String, Double],
+      cap: Int): Seq[String] =
+    inRun.flatMap { case (n, t) =>
+      prevTimes.get(n).filter(pt => t >= 1.0 && pt > 0 && t / pt >= 2.0)
+        .map(pt => (n, t / pt, t - pt))
+    }.sortBy { case (n, ratio, excess) => (-ratio, -excess, n) }
+      .take(cap).map(_._1)
 
   /** Per-query cur/prev delta fragment from [[previousTimes]]' map —
     * the artifact itself shows regressions, not just totals. */

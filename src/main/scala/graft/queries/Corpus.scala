@@ -490,17 +490,19 @@ object Corpus {
   // code path — wedge generation, closure, zero-triangle pendants — is
   // exercised. The oracle enumerates each triangle once via the a<b<c
   // ordered 3-way self-join; the operator's degree-ordered orientation
-  // must land on the same per-node counts.
+  // must land on the same per-node counts. Each document's token pairs
+  // are generated inside its row (its distinct tokens exploded twice),
+  // so the only shuffle before the operator is the pair distinct — no
+  // doc-keyed self-join.
   def q138Triangles(s: SparkSession, dir: String): DataFrame = {
-    val toks = t(s, dir, "documents")
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .filter(col("tok") =!= "").distinct()
-    val a = toks.select(col("doc_id"), col("tok").as("tok_a"))
-    val b = toks.select(col("doc_id"), col("tok").as("tok_b"))
-    val pairs = a.join(b, "doc_id")
+    val toks = t(s, dir, "documents").select(
+      array_distinct(filter(split(col("text"), " "), _ =!= "")).as("toks"))
+    val pairs = toks
+      .select(col("toks"), explode(col("toks")).as("tok_a"))
+      .select(col("tok_a"), explode(col("toks")).as("tok_b"))
       .filter(col("tok_a") < col("tok_b"))
-      .select(col("tok_a"), col("tok_b")).distinct()
-    graft.ops.Graph.triangles(pairs, "tok_a", "tok_b")
+      .distinct()
+    Graph.triangles(pairs, "tok_a", "tok_b")
       .select(col("node"), col("degree"), col("n_triangles"),
         d6(col("clustering_coeff")).as("clustering_coeff"))
   }
